@@ -323,8 +323,7 @@ object Bench {
     * downstream reads (two bucket-join branches + two vector-lookup sides)
     * scan it once instead of recomputing the perturbation map per branch.
     * Data PREP, not query — the bench materializes it outside the timed
-    * region (ScaleStress's embed mode draws the same line) and unpersists
-    * it afterwards.
+    * region and unpersists it afterwards.
     */
   private[graft] def expand10x(s: SparkSession, d: String): DataFrame =
     graft.operators.Dedup
@@ -336,7 +335,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     // reference runner defaults to 3 iterations (-i, tpcds_bench.rs:277-279);
     // driver timing wants a single pass, so 1 is our default
     val iterations = sys.env.getOrElse("SPARK_GRAFT_ITERATIONS", "1").toInt
@@ -522,7 +522,7 @@ object Bench {
     // A4 tie-in: PLAN (not run) a scan over a many-small-files layout
     // and record files-per-task, so a small-file bin-packing regression
     // shows up in the per-round detail JSON rather than only in the
-    // ScaleStress receipts. The probe table is built once and reused
+    // BASELINE.md receipts. The probe table is built once and reused
     // across sessions; "files" is the live manifest count (= tasks with
     // packing opted out), "tasks_packed" the default plan's partitions.
     def packingProbeJson: String = try {
@@ -543,9 +543,16 @@ object Bench {
           .write.format("graft-orc").option("graft.manifest", "true")
           .mode("overwrite").save(dir)
       }
-      val unpacked = PlanProbe.plannedPartitions(dir,
-        Map("graft.pack_small_files" -> "false"))
-      val packed = PlanProbe.plannedPartitions(dir, Map.empty)
+      // planned partitions only — nothing executes
+      def planned(opts: Map[String, String]): Int = {
+        val m = new CaseInsensitiveStringMap((Map("path" -> dir) ++ opts).asJava)
+        val schema = new graft.sources.v2.GraftOrcDataSource().inferSchema(m)
+        new graft.sources.v2.GraftOrcScanBuilder(schema, m).build()
+          .asInstanceOf[graft.sources.v2.GraftOrcScan]
+          .planInputPartitions().length
+      }
+      val unpacked = planned(Map("graft.pack_small_files" -> "false"))
+      val packed = planned(Map.empty)
       s"""{"files":$unpacked,"tasks_packed":$packed}"""
     } catch { case _: Throwable => "{}" }
 

@@ -1137,30 +1137,21 @@ object Relational {
         // (measured: 5.4 s -> ~4 s at sf0.1). FIFO scheduling keeps the
         // first-submitted pass priority; results are deterministic
         // either way.
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val exF = Future(li.agg(
-          countDistinct(col("l_orderkey")).as("n_orders"),
-          countDistinct(col("l_partkey")).as("n_parts")).collect()(0))
-        val rF = Future(li.agg(
-          round(expr("percentile(CAST(l_quantity AS DOUBLE), 0.5)"), 4)
-            .as("median_qty"),
-          round(expr("percentile(CAST(l_extendedprice AS DOUBLE), 0.95)"),
-            4).as("p95_price"),
-          approx_count_distinct(col("l_orderkey"), 0.01).as("a_orders"),
-          approx_count_distinct(col("l_partkey"), 0.01).as("a_parts"),
-          percentile_approx(col("l_quantity").cast("double"), lit(0.5),
-            lit(10000)).as("a_median"),
-          percentile_approx(col("l_extendedprice").cast("double"),
-            lit(0.95), lit(10000)).as("a_p95")).collect()(0))
-        // await BOTH before propagating either failure (the NearDupIngest
-        // pattern): if the distinct pass throws, the percentile pass must
-        // not keep running as a detached job past this query's scope
-        val exT = scala.util.Try(Await.result(exF, Duration.Inf))
-        val rT = scala.util.Try(Await.result(rF, Duration.Inf))
-        val ex = exT.get
-        val r = rT.get
+        val (ex, r) = graft.Overlap.both(
+          li.agg(
+            countDistinct(col("l_orderkey")).as("n_orders"),
+            countDistinct(col("l_partkey")).as("n_parts")).collect()(0),
+          li.agg(
+            round(expr("percentile(CAST(l_quantity AS DOUBLE), 0.5)"), 4)
+              .as("median_qty"),
+            round(expr("percentile(CAST(l_extendedprice AS DOUBLE), 0.95)"),
+              4).as("p95_price"),
+            approx_count_distinct(col("l_orderkey"), 0.01).as("a_orders"),
+            approx_count_distinct(col("l_partkey"), 0.01).as("a_parts"),
+            percentile_approx(col("l_quantity").cast("double"), lit(0.5),
+              lit(10000)).as("a_median"),
+            percentile_approx(col("l_extendedprice").cast("double"),
+              lit(0.95), lit(10000)).as("a_p95")).collect()(0))
         def pct(approx: Double, exact: Double): Double =
           math.abs(approx - exact) / math.abs(exact)
         Seq(

@@ -38,9 +38,9 @@ object TpcdsShapes {
   private[operators] val oRev =
     "CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(30,8))"
 
-  /** q53 body over an injectable lineitem frame — one definition shared by
-    * the QueryDef and ScaleStress's scaled-input twin, so the stressed
-    * arithmetic cannot drift from the oracle-checked query.
+  /** q53 body over an injectable lineitem frame (the BASELINE.md tpcds
+    * receipt ran it over a scaled input, so the stressed arithmetic was
+    * the oracle-checked one).
     */
   private[graft] def netOfReturns(li: DataFrame): DataFrame = {
     val ret = li.filter(col("l_returnflag") === "R")
@@ -533,9 +533,10 @@ object TpcdsShapes {
     // re-scan either way. The threshold is rearranged to integer-free
     // decimal algebra (qty * 5 * cnt < sum_qty) so the comparison is exact
     // in both engines — a double 0.2*avg would round differently at ties.
-    // (ScaleStress tpcds: the decimal compare, not the join, dominates at
-    // 10x — the oracle-exact arithmetic is the price of hash parity; a
-    // production pipeline free of the oracle would compare doubles.)
+    // (BASELINE.md tpcds receipt: the decimal compare, not the join,
+    // dominates at 10x — the oracle-exact arithmetic is the price of hash
+    // parity; a production pipeline free of the oracle would compare
+    // doubles.)
     QueryDef("q57_small_qty_revenue",
       (s, d) => smallQtyRevenue(Tables.lineitem(s, d)),
       Some(s"""SELECT count(*) AS n_small,

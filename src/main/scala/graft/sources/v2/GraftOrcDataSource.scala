@@ -1131,7 +1131,7 @@ case class GraftOrcInputPartition(filePath: String, start: Long, length: Long,
   * `FilePartition` bin packing. At lake scale a table is mostly many
   * small-ish files (streaming ingest, partitioned writes), and one task
   * per file pays scheduler latency + reader open cost per FILE — the
-  * neardup ScaleStress receipt measured a history join going 2.4 -> 15 s
+  * BASELINE.md neardup receipt measured a history join going 2.4 -> 15 s
   * purely on file count. Every per-file concern (schema-version
   * resolution, MoR sidecars, corrupt-file tolerance, per-file metrics)
   * is untouched: the factory chains the ordinary per-file readers.

@@ -114,8 +114,8 @@ object IngestDedup {
     */
   /** @param onMerge observation hook invoked with each executed MERGE
     *   statement's result frame (its executedPlan carries the target
-    *   scan's metrics — the ScaleStress streamingest receipt reads
-    *   `graftFilesRead` off it). Must not re-execute the frame.
+    *   scan's metrics, e.g. `graftFilesRead`). Must not re-execute
+    *   the frame.
     */
   def mergeBatch(batch: DataFrame, cleanTable: String,
                  fingerprint: Column, payloadCols: Seq[String],

@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
   * key-bucket set (`kb = pmod(hash(key), n)` identity-partition column;
   * the static `kb IN (...)` filter is an ordinary pushed predicate, so
   * the scan prunes to the batch's buckets — same receipt family as the
-  * streamingest ScaleStress mode) and streams PAST the broadcast batch
+  * BASELINE.md streamingest receipt) and streams PAST the broadcast batch
   * side — history is scanned once per batch and never shuffled. Both
   * MERGEs carry the static bucket predicate in their ON clause (MoR
   * MERGEs get no runtime group filtering — GraftOrcMergePruneSpec)
@@ -49,7 +49,7 @@ import org.apache.spark.sql.functions._
   * the ascending-id crawl contract min/max file statistics prune the
   * ENTIRE history from both MERGE target scans — the MERGEs are
   * O(batch), not O(history), and only the one decision-join scan pays
-  * for corpus awareness (the ScaleStress `neardup` receipt measures
+  * for corpus awareness (the BASELINE.md `neardup` receipt measured
   * exactly this split). Driver collects are bounded by the bucket
   * count, never by data. Signature history grows with the corpus;
   * key-sorted compaction keeps per-bucket file counts flat exactly as
@@ -110,8 +110,8 @@ object NearDupIngest {
     * below the mark (full reordering — thrown or warned per
     * `failOnOutOfOrder`). The healthy-path zero-cost claim is exactly
     * "`fired` stays 0 on an ascending stream" — the per-round bench
-    * stamps these into its detail context and the ScaleStress neardup
-    * receipts assert them, so a refactor that accidentally puts the
+    * stamps these into its detail context and GraftOrcStreamIngestSpec
+    * asserts them, so a refactor that accidentally puts the
     * probe on the hot path (e.g. evaluating `seen` eagerly or widening
     * the at-or-below test) shows up in the artifact, not just in a
     * latency drift. JVM-lifetime counters; [[resetHwmProbeStats]]
@@ -124,17 +124,6 @@ object NearDupIngest {
     "fired" -> probeFired.get(), "refused" -> probeRefused.get())
 
   def resetHwmProbeStats(): Unit = { probeFired.set(0L); probeRefused.set(0L) }
-
-  /** Default phase hook: a stderr receipt line per phase when
-    * `SPARK_GRAFT_PHASE_LOG` is set (guide §1.1 measurement aid for the
-    * bench-declared ingest, whose caller passes no hook); no-op
-    * otherwise.
-    */
-  private[graft] val defaultPhaseLog: (String, Double) => Unit =
-    if (sys.env.contains("SPARK_GRAFT_PHASE_LOG"))
-      (n, s) => System.err.println(
-        f"[neardup-phase] $n%-12s ${s}%8.3f s")
-    else (_, _) => ()
 
   /** Key-bucket column over `key`. */
   def keyBucket(n: Int) = pmod(hash(col("key")), lit(n)).cast("int")
@@ -159,7 +148,6 @@ object NearDupIngest {
              bandKeys: DataFrame => DataFrame =
                graft.operators.Dedup.detBandKeys,
              maxFilesPerTrigger: Option[Int] = None,
-             onPhase: (String, Double) => Unit = defaultPhaseLog,
              onMerge: (String, DataFrame) => Unit = (_, _) => (),
              failOnOutOfOrder: Boolean = true): Unit = {
     val reader = spark.readStream.format("graft-orc")
@@ -169,16 +157,14 @@ object NearDupIngest {
     val crawl = reader.load(crawlDir)
     val payloadCols = crawl.columns.filterNot(c =>
       c.equalsIgnoreCase("doc_id") || c.equalsIgnoreCase("text")).toSeq
-    val tIngest = System.nanoTime()
     val q = crawl.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         mergeBatch(batch, cleanTable, sigTable, payloadCols, buckets,
-          bandKeys, onPhase, onMerge, failOnOutOfOrder)
+          bandKeys, onMerge, failOnOutOfOrder)
       }
       .start()
     try q.processAllAvailable() finally q.stop()
-    defaultPhaseLog("ingest_total", (System.nanoTime() - tIngest) / 1e9)
     q.exception.foreach(throw _)
   }
 
@@ -188,17 +174,13 @@ object NearDupIngest {
     * table. Both MERGEs are insert-only and keyed, hence replay no-ops.
     * Exposed for the decision-semantics specs (injectable banding).
     */
-  /** @param onPhase observation hook `(phase, seconds)` for the batch's
-    *   four timed phases (`band`, `decide`, `merge_clean`, `merge_sig`)
-    *   — the ScaleStress neardup receipt reads these.
-    * @param onMerge observation hook invoked with each executed MERGE's
+  /** @param onMerge observation hook invoked with each executed MERGE's
     *   result frame (its executedPlan carries the target scan's metrics,
     *   e.g. `graftFilesRead`). Must not re-execute the frame.
     */
   def mergeBatch(batch: DataFrame, cleanTable: String, sigTable: String,
                  payloadCols: Seq[String], buckets: Int,
                  bandKeys: DataFrame => DataFrame,
-                 onPhase: (String, Double) => Unit = (_, _) => (),
                  onMerge: (String, DataFrame) => Unit = (_, _) => (),
                  failOnOutOfOrder: Boolean = true)
       : Unit = {
@@ -207,12 +189,6 @@ object NearDupIngest {
     // bounds aggregate below subsumes the scan and an empty batch exits
     // through its null min/max before anything commits
     val s = batch.sparkSession
-    var t0 = System.nanoTime()
-    def phase(name: String): Unit = {
-      val t1 = System.nanoTime()
-      onPhase(name, (t1 - t0) / 1e9)
-      t0 = t1
-    }
     // crawl may re-deliver a doc_id inside one batch (at-least-once
     // upstream); collapse to one deterministic row per id
     val docs = batch
@@ -248,9 +224,6 @@ object NearDupIngest {
         .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
       .withColumn("kb", keyBucket(buckets))
       .localCheckpoint(true)
-    // sub-segment receipt (stderr-only, never the hook: ScaleStress sums
-    // hook phases and an overlapping segment would double-count)
-    defaultPhaseLog("band_ckpt", (System.nanoTime() - t0) / 1e9)
     var kept: DataFrame = null
     try {
       // ONE bounded job over the PERSISTED batch + the checkpointed keys
@@ -339,7 +312,6 @@ object NearDupIngest {
       // collider machinery is skipped
       val kbs = stat.find(_.getInt(0) == 1).get
         .getSeq[Int](3).sorted // bounded by `buckets`
-      phase("band")
       // colliders: every batch doc with a strictly-smaller-id band-key
       // sharer, in history (signature table pruned to the batch's
       // buckets — static pushed predicate) or in this batch (a dropped
@@ -365,7 +337,6 @@ object NearDupIngest {
       locally {
         val dbs = kept.groupBy().agg(collect_set(col("db"))).head()
           .getSeq[Int](0).sorted
-        phase("decide")
         // both MERGEs carry `t.doc_id >= minId` — implied by the match
         // condition (t.doc_id = b.doc_id), so results are IDENTICAL; as
         // a STATIC predicate it reaches the target scan and, under the
@@ -382,29 +353,11 @@ object NearDupIngest {
         // was already tolerated (replay MERGEs are keyed insert-only
         // no-ops), and a one-failed/one-landed overlap replays the same
         // way; the high-water mark still advances only after BOTH.
-        // onPhase/onMerge hooks fire from THIS thread after both
-        // complete (hook implementations stay single-threaded); each
-        // merge_* phase reports its own overlapped wall time.
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        // fresh thread per merge, created from THIS batch thread — not
-        // the global pool: a new Thread inherits the batch's Spark local
-        // properties (job group, SQL execution id) via
-        // InheritableThreadLocal, so q.stop()'s job-group cancel reaches
-        // in-flight merges, and two concurrent streams can never starve
-        // each other through a shared pool (r22, from r21 advice)
-        implicit val mergeEc: ExecutionContext =
-          ExecutionContext.fromExecutor((r: Runnable) => {
-            val t = new Thread(r, "graft-neardup-merge")
-            t.setDaemon(true)
-            t.start()
-          })
-        def timed[T](f: => T): (T, Double) = {
-          val t1 = System.nanoTime()
-          val r = f
-          (r, (System.nanoTime() - t1) / 1e9)
-        }
-        val cleanF = Future(timed {
+        // Both run on fresh threads created by THIS batch thread
+        // ([[graft.Overlap]]), so q.stop()'s job-group cancel reaches
+        // in-flight merges. onMerge hooks fire from THIS thread after
+        // both complete (hook implementations stay single-threaded).
+        val (cleanR, sigR) = graft.Overlap.both(
           if (dbs.isEmpty) None
           else {
             val view = tempView(s, kept)
@@ -418,9 +371,7 @@ object NearDupIngest {
                  |  VALUES (${insCols.map("b." + _).mkString(", ")})
                  |""".stripMargin))
             finally s.catalog.dropTempView(view)
-          }
-        })
-        val sigF = Future(timed {
+          },
           if (kbs.isEmpty) None
           else {
             val kview = tempView(s, keys)
@@ -434,18 +385,9 @@ object NearDupIngest {
                  |  VALUES (b.band, b.key, b.doc_id, b.kb)
                  |""".stripMargin))
             finally s.catalog.dropTempView(kview)
-          }
-        })
-        // await BOTH before propagating either failure: a dangling
-        // mid-commit future must not outlive this batch
-        val cleanR = scala.util.Try(Await.result(cleanF, Duration.Inf))
-        val sigR = scala.util.Try(Await.result(sigF, Duration.Inf))
-        t0 = System.nanoTime() // phases below start from merge completion
-        cleanR.foreach { case (df, secs) =>
-          df.foreach(onMerge("clean", _)); onPhase("merge_clean", secs) }
-        sigR.foreach { case (df, secs) =>
-          df.foreach(onMerge("sig", _)); onPhase("merge_sig", secs) }
-        cleanR.get; sigR.get
+          })
+        cleanR.foreach(onMerge("clean", _))
+        sigR.foreach(onMerge("sig", _))
       }
       // advance the high-water mark AFTER both MERGEs committed: a
       // crash in between leaves it stale-LOW, which the next in-order
@@ -455,7 +397,6 @@ object NearDupIngest {
       if (hwm.forall(maxId > _))
         s.sql(s"ALTER TABLE $cleanTable SET TBLPROPERTIES(" +
           s"'$HwmProp'='$maxId')")
-      defaultPhaseLog("hwm_commit", (System.nanoTime() - t0) / 1e9)
     } finally {
       docs.unpersist()
       BatchFrames.dropLocalCheckpoint(keys)

@@ -33,4 +33,35 @@ class ApproxAggSpec extends AnyFunSuite {
     // Expand+double-shuffle that exact count(distinct) requires
     assert(!plan.contains("Expand"), plan.take(600))
   }
+
+  test("q40_exact_aggs: both overlapped passes carry the CALLER's job " +
+    "group, not the group of an earlier call") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    def run(group: String): Unit = {
+      sc.setJobGroup(group, group)
+      try SparkEntry.queries("q40_exact_aggs")(spark, TestSpark.sf0001)
+        .collect()
+      finally sc.clearJobGroup()
+    }
+    run("q40-group-a")
+    org.apache.spark.GraftSparkBridge.waitUntilListenerBusEmpty(sc)
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("<none>"))
+    }
+    sc.addSparkListener(listener)
+    try {
+      run("q40-group-b")
+      org.apache.spark.GraftSparkBridge.waitUntilListenerBusEmpty(sc)
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val seen = groups.asScala.toSeq
+    assert(seen.nonEmpty)
+    assert(seen.forall(_ == "q40-group-b"),
+      s"jobs of the second call ran under groups $seen")
+  }
 }

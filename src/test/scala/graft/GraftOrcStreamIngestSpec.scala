@@ -352,6 +352,26 @@ class GraftOrcStreamIngestSpec extends AnyFunSuite {
     assert(NearDupIngest.hwmProbeStats ===
       Map("fired" -> 1L, "refused" -> 0L),
       "a true replay must fire the probe exactly once, refusing nothing")
+    // the same replay delivered as two commits and read one commit per
+    // micro-batch: EVERY at-or-below batch pays the probe, none refuses,
+    // and the multi-batch replay is still a state no-op (every batch
+    // runs the signature MERGE, so its hook counts the batches)
+    val crawl3 = Files.createTempDirectory("graft-nd-reord3").toString
+    deliver(crawl3, docs(10 until 15, 0L, "w1"))
+    deliver(crawl3, docs(15 until 20, 0L, "w1"))
+    val ckpt3 = Files.createTempDirectory("graft-nd-reord-ck3")
+      .toString + "/c"
+    val batches = new java.util.concurrent.atomic.AtomicLong()
+    NearDupIngest.resetHwmProbeStats()
+    NearDupIngest.ingest(spark, crawl3, qt, sig, ckpt3,
+      bandKeys = modKey, maxFilesPerTrigger = Some(2),
+      onMerge = (which, _) => if (which == "sig") batches.incrementAndGet())
+    assert(batches.get() >= 2L, s"expected a multi-batch replay, got $batches")
+    assert(spark.sql(s"SELECT doc_id FROM $qt ORDER BY doc_id")
+      .as[Long].collect().toSeq === kept0, "multi-batch replay changed state")
+    assert(NearDupIngest.hwmProbeStats ===
+      Map("fired" -> batches.get(), "refused" -> 0L),
+      "every replay batch must fire the probe once, refusing nothing")
     NearDupIngest.resetHwmProbeStats()
     // opting out accepts the reordered batch under delivery-order
     // semantics (the stream's offset was never committed past it)

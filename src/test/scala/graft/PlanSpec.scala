@@ -377,4 +377,34 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("specifiedwindowframe(RangeFrame, -2, currentrow$())"),
       p.take(1500))
   }
+
+  test("dd_semdedup: the centroid argmax is a max_by aggregate, never a " +
+    "Window over the k-times-amplified frame") {
+    val p = plan("dd_semdedup")
+    assert(!p.contains("Window"), p.take(1500))
+    assert(p.contains("max_by"), p.take(1500))
+  }
+
+  test("CDC position pairs broadcast with no distinct aggregate below " +
+    "the broadcast") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    def nodes(pl: SparkPlan): Seq[SparkPlan] = pl match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case o => o +: (o.children ++ o.subqueries).flatMap(nodes)
+    }
+    val ep = SparkEntry.queries("rl_cdc_changelog")(spark, sf)
+      .queryExecution.executedPlan
+    val pairs = nodes(ep).collect {
+      case b: BroadcastExchangeExec
+          if b.output.exists(_.name == "__cdc_dpos") => b
+    }
+    assert(pairs.nonEmpty, ep.treeString.take(3000))
+    pairs.foreach { b =>
+      assert(!nodes(b.child).exists(_.isInstanceOf[BaseAggregateExec]),
+        b.treeString.take(1500))
+    }
+  }
 }
